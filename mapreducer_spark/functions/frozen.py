@@ -41,6 +41,16 @@ storage written by the same pipeline step; the single-directory layout
 here is the fixture-scale stand-in, and serving is a plain
 ``spark.read.parquet`` — partition-parallel, predicate-pushable,
 nothing driver-sized.
+
+Serving and reuse: every serve reads the fingerprint file ONCE —
+``is_fresh`` returns the record it accepted (``None`` = refuse), and the
+same record both picks the path (frozen read vs live build) and, for
+artifacts shared across queries, becomes the freshness token of their
+session-cache entry (``session_artifact`` -> functions/memo.py).  The
+token is looked up BEFORE serving, so a cache hit runs no parquet read,
+no ``fan_out`` and no build; a refreeze changes the record, so the next
+serve replaces the old entry instead of returning its rows.  Plain
+``serve(spark, sf_dir)`` calls are not memoized.
 """
 
 from __future__ import annotations
@@ -54,6 +64,8 @@ from functools import lru_cache
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from mapreducer_spark.functions.memo import session_memo
 
 _FROZEN_DIR = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -99,13 +111,7 @@ def frozen_spec(
         def serve(spark: SparkSession, sf_dir: str) -> DataFrame:
             return frozen_or_build(spark, sf_dir, spec)
 
-        # Single-check serving (ADVICE r13): callers whose downstream
-        # materialization policy depends on WHERE the frame came from
-        # (frozen artifact vs live build) read the decision from the
-        # same is_fresh call that made it, instead of re-deciding.
-        serve.info = lambda spark, sf_dir: frozen_or_build_info(
-            spark, sf_dir, spec
-        )
+        serve.spec = spec
         serve.__name__ = f"frozen_{name}"
         serve.__doc__ = (
             f"Serve the frozen {name!r} artifact for sf_dir when its "
@@ -173,55 +179,73 @@ def _source_md5s(sf_dir: str, sources: tuple[str, ...]) -> dict[str, str | None]
     }
 
 
+def _fixture(sf_dir: str) -> str:
+    return os.path.basename(sf_dir.rstrip("/"))
+
+
 def artifact_path(sf_dir: str, name: str) -> str:
-    fixture = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(_FROZEN_DIR, fixture, name)
+    return os.path.join(_FROZEN_DIR, _fixture(sf_dir), name)
 
 
-def is_fresh(sf_dir: str, spec: FrozenSpec) -> bool:
-    """True iff a frozen artifact exists for this fixture AND its
-    recorded source fingerprints and build version both match."""
-    fixture = os.path.basename(sf_dir.rstrip("/"))
-    rec = _fingerprints().get(f"{fixture}/{spec.name}")
+def is_fresh(sf_dir: str, spec: FrozenSpec) -> dict | None:
+    """The fingerprint record that makes this fixture's artifact
+    servable — it exists AND its recorded source fingerprints and build
+    version both match — else None.  The fingerprint file is read once;
+    the returned record is the freshness token of whatever it serves."""
+    rec = _fingerprints().get(f"{_fixture(sf_dir)}/{spec.name}")
     if not isinstance(rec, dict):
-        return False
+        return None
     if rec.get("version") != spec.version:
-        return False
-    path = artifact_path(sf_dir, spec.name)
-    if not os.path.isdir(path):
-        return False
+        return None
+    if not os.path.isdir(artifact_path(sf_dir, spec.name)):
+        return None
     recorded = rec.get("sources", {})
     if not all(
         recorded.get(t) is not None
         and _source_md5s(sf_dir, (t,))[t] == recorded.get(t)
         for t in spec.sources
     ):
-        return False
+        return None
     recorded_extra = rec.get("extra", {})
-    return all(
+    if not all(
         recorded_extra.get(os.path.basename(f)) is not None
         and _file_md5(f) == recorded_extra.get(os.path.basename(f))
         for f in spec.extra_files
-    )
+    ):
+        return None
+    return rec
 
 
 def frozen_or_build(
     spark: SparkSession, sf_dir: str, spec: FrozenSpec
 ) -> DataFrame:
-    return frozen_or_build_info(spark, sf_dir, spec)[0]
+    return _serve(spark, sf_dir, spec, is_fresh(sf_dir, spec))
 
 
-def frozen_or_build_info(
-    spark: SparkSession, sf_dir: str, spec: FrozenSpec
-) -> tuple[DataFrame, str | None]:
-    """(frame, freshness token).  The token is the serialized
-    fingerprint record the ONE is_fresh call accepted (None = live
-    build) — callers use it both as the served-frozen flag and as a
-    memo-key component, so a mid-session refreeze/retrain changes the
-    token and can never pair a stale cached frame (or a checkpoint/
-    no-checkpoint decision) with a different artifact than the one
-    fingerprint-checked here (ADVICE r13 TOCTOU)."""
-    if is_fresh(sf_dir, spec):
+def session_artifact(
+    spark: SparkSession,
+    sf_dir: str,
+    serve: Callable[[SparkSession, str], DataFrame],
+) -> DataFrame:
+    """``serve``'s artifact for sf_dir, stored in the session cache
+    under the fingerprint record that accepted it (None = live build,
+    checkpointed there)."""
+    spec = serve.spec
+    rec = is_fresh(sf_dir, spec)
+    return session_memo(
+        spark,
+        (spec.name, sf_dir),
+        lambda: _serve(spark, sf_dir, spec, rec),
+        token=rec,
+    )
+
+
+def _serve(
+    spark: SparkSession, sf_dir: str, spec: FrozenSpec, rec: dict | None
+) -> DataFrame:
+    """Frozen read when ``rec`` (is_fresh's verdict) accepted the
+    artifact, else the live build."""
+    if rec is not None:
         # fan_out: the fixture-scale artifact is one parquet file = ONE
         # input split, which would serialize every downstream per-row
         # stage (explode, hashing, pair expansion) onto a single core —
@@ -231,15 +255,10 @@ def frozen_or_build_info(
         # fan_out is a no-op (sources/tables.py:62).
         from mapreducer_spark.sources import fan_out
 
-        fixture = os.path.basename(sf_dir.rstrip("/"))
-        token = json.dumps(
-            _fingerprints().get(f"{fixture}/{spec.name}"), sort_keys=True
-        )
-        return (
-            fan_out(spark.read.parquet(artifact_path(sf_dir, spec.name))),
-            token,
-        )
-    fixture = os.path.basename(sf_dir.rstrip("/"))
+        return fan_out(spark.read.parquet(artifact_path(sf_dir, spec.name)))
+    # A second fingerprint read, only to word the warning: ``rec``
+    # already chose the path.
+    fixture = _fixture(sf_dir)
     if f"{fixture}/{spec.name}" in _fingerprints():
         warnings.warn(
             f"frozen artifact {spec.name!r} for {fixture!r} is STALE "
@@ -249,7 +268,7 @@ def frozen_or_build_info(
             RuntimeWarning,
             stacklevel=2,
         )
-    return spec.build(spark, sf_dir), None
+    return spec.build(spark, sf_dir)
 
 
 def freeze(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> dict:
@@ -259,7 +278,7 @@ def freeze(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> 
     file.  Returns {name: n_rows}."""
     import shutil
 
-    fixture = os.path.basename(sf_dir.rstrip("/"))
+    fixture = _fixture(sf_dir)
     fps: dict = {}
     if os.path.exists(_FP_PATH):
         with open(_FP_PATH) as f:

@@ -1,54 +1,78 @@
-"""Session-scoped DataFrame memoization for shared derived artifacts.
+"""The session artifact cache: every derived frame the engine reuses
+across the queries of one session goes through this one dict.
 
 Several query families derive the same intermediate frame (the BPE
-training segmentation, SimHash fingerprints, the co-purchase edge list,
-the near-dup pair graph and its component labels):
-within one session — the bench, the driver's correctness sweep, a
-notebook — the second consumer should get the materialized frame for
-free instead of re-deriving it.
+training run, SimHash fingerprints, the co-purchase edge list, the
+near-dup pair graph and its component labels, the Lloyd training
+loop): within one session — the bench, the driver's correctness sweep,
+a notebook — the second consumer gets the stored frame instead of
+re-deriving it.
 
-Same contract as graph._SYM_EDGE_CACHE: keyed by applicationId so a new
-SparkSession never sees another session's frame; fixture inputs are
-immutable within a session, so no invalidation; entries from other
-(stopped) applications are evicted on insert so long-lived processes
-don't pin dead sessions' checkpoints.
+Key: ``(applicationId, *key)``, so a new SparkSession never sees another
+session's frame.  Entries from other (stopped) applications are evicted
+on insert, so a long-lived process does not pin dead sessions' frames.
 
-The memoized frame is eagerly localCheckpoint-ed: consumers get a short
-lineage-free plan, and the (driver-resident) cost is bounded because
-every memoized artifact here is vocabulary/metadata-sized (|vocab|,
-|docs|, |edges| rows — never corpus-row-sized payloads).
+Token: each entry carries the freshness token it was computed from —
+the fingerprint record of the frozen artifact that served it
+(functions/frozen.session_artifact), or ``None`` for a live build.  A
+lookup hits only when the caller's token equals the stored one; a
+changed token rebuilds and REPLACES the entry under the same key, so a
+mid-session refreeze can never pair a cached frame with a different
+artifact.  Live-build inputs (fixture tables) are immutable within a
+session; a live build whose inputs can change puts their fingerprint
+in its key.
+
+Checkpoint rule: a live build (token ``None``) is eagerly
+``localCheckpoint``-ed, so consumers get a short lineage-free plan; its
+driver-resident cost is bounded because every memoized artifact is
+vocabulary/metadata-sized (|vocab|, |docs|, |edges| rows — never
+corpus-row-sized payloads).  A frozen read is stored as it is: it is
+already a cheap partition-parallel parquet scan, and copying it into
+block-manager memory only added materialization time.  A tuple value
+(e.g. BPE merges plus segmentation) is one entry; each of its frames
+follows the rule.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
+from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
-_CACHE: dict[tuple, DataFrame] = {}
+_CACHE: dict[tuple, tuple[Any, Any]] = {}
 
 
 def session_memo(
-    spark: SparkSession, key: tuple, build: Callable[[], DataFrame]
-) -> DataFrame:
-    """Return the memoized frame for ``key`` (scoped to the live
-    application), building + checkpointing it on first use."""
+    spark: SparkSession,
+    key: tuple,
+    build: Callable[[], Any],
+    token: Any = None,
+) -> Any:
+    """Return the stored value for ``key`` (scoped to the live
+    application) when it was stored under ``token``; otherwise build
+    it, checkpoint it if ``token`` is None, and store it in place of
+    any older entry."""
     app_id = spark.sparkContext.applicationId
     full_key = (app_id, *key)
-    cached = _CACHE.get(full_key)
-    if cached is not None:
-        return cached
+    hit = _CACHE.get(full_key)
+    if hit is not None and hit[0] == token:
+        return hit[1]
     for stale in [k for k in _CACHE if k[0] != app_id]:
         del _CACHE[stale]
-    df = build().localCheckpoint(eager=True)
-    _CACHE[full_key] = df
-    return df
+    value = build()
+    if token is None:
+        value = (
+            tuple(df.localCheckpoint(eager=True) for df in value)
+            if isinstance(value, tuple)
+            else value.localCheckpoint(eager=True)
+        )
+    _CACHE[full_key] = (token, value)
+    return value
 
 
 def clear_session_caches() -> None:
-    """Drop EVERY session-scoped derived-frame cache in the package —
-    this module's memo plus the two module-local dicts with the same
-    app-keyed contract (graph._SYM_EDGE_CACHE, textstats._BPE_CACHE).
+    """Drop every session-cached derived frame.
 
     For bench harnesses: a per-query timing taken after another query
     warmed a shared memo is an ordering artifact, not a cost statement
@@ -59,8 +83,4 @@ def clear_session_caches() -> None:
     Production sessions never call this; the memo exists precisely so
     the second consumer in a real session gets the frame for free.
     """
-    from mapreducer_spark.operators import graph, textstats
-
     _CACHE.clear()
-    graph._SYM_EDGE_CACHE.clear()
-    textstats._BPE_CACHE.clear()

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreducer_spark.functions.text import ORACLE_TOKEN_LIST_SNIPPET
-from mapreducer_spark.functions.frozen import frozen_spec
+from mapreducer_spark.functions.frozen import frozen_spec, session_artifact
 from mapreducer_spark.operators.dedup import (
     docs_with_near_dups,
     neardup_pairs_shared,
@@ -311,15 +311,10 @@ def neardup_cc_labels_frozen(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _neardup_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Component labels over the near-dup pair graph: frozen artifact
     when fingerprint-fresh (live iterative rebuild otherwise), memoized
-    per (session, fixture) — shared between neardup_clusters,
-    corpus_after_neardup_dedup and corpus_dedup_keep_best."""
-    from mapreducer_spark.functions.memo import session_memo
-
-    return session_memo(
-        spark,
-        ("neardup_cc_labels", sf_dir),
-        lambda: neardup_cc_labels_frozen(spark, sf_dir),
-    )
+    per (session, fixture, artifact token) — shared between
+    neardup_clusters, corpus_after_neardup_dedup and
+    corpus_dedup_keep_best."""
+    return session_artifact(spark, sf_dir, neardup_cc_labels_frozen)
 
 
 @register(

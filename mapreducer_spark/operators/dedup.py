@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapreducer_spark.functions.frozen import frozen_spec
+from mapreducer_spark.functions.frozen import frozen_spec, session_artifact
 from mapreducer_spark.functions.hashes import md5_int64, oracle_md5_int64
 from mapreducer_spark.functions.text import (
     ORACLE_TOKEN_LIST_SNIPPET,
@@ -259,15 +259,9 @@ def neardup_jaccard_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
 def neardup_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The near-dup pair frame for CONSUMERS: fingerprint-fresh frozen
     artifact (functions/frozen.py) — the materialization a production
-    pipeline writes exactly once — memoized per (session, fixture);
-    live rebuild with a loud warning on staleness."""
-    from mapreducer_spark.functions.memo import session_memo
-
-    return session_memo(
-        spark,
-        ("neardup_pairs", sf_dir),
-        lambda: neardup_pairs_frozen(spark, sf_dir),
-    )
+    pipeline writes exactly once — memoized per (session, fixture,
+    artifact token); live rebuild with a loud warning on staleness."""
+    return session_artifact(spark, sf_dir, neardup_pairs_frozen)
 
 
 def _neardup_jaccard_blocked_frame(spark: SparkSession, sf_dir: str) -> DataFrame:

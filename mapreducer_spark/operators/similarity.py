@@ -3853,24 +3853,16 @@ def _lloyd_artifacts(
 
     _embeddings_md5.cache_clear()
     fp = _embeddings_md5(sf_dir)
-    holder: dict = {}
 
-    def build_assign():
+    def build():
         em = load_table(spark, sf_dir, "embeddings").select(
             "vec_id", F.col("embedding").alias("v")
         )
         cents, assign = _spherical_lloyd(em, k, rounds)
-        holder["cents"] = cents
-        return assign.select("vec_id", "cent_id", "sim")
+        return assign.select("vec_id", "cent_id", "sim"), cents
 
-    assign = session_memo(
-        spark, ("lloyd_assign", sf_dir, fp, k, rounds), build_assign
-    )
-    # Built (and therefore cached) together with assign above; the
-    # lambda only fires on the same first call that filled holder.
-    cents = session_memo(
-        spark, ("lloyd_cents", sf_dir, fp, k, rounds),
-        lambda: holder["cents"],
+    assign, cents = session_memo(
+        spark, ("lloyd", sf_dir, fp, k, rounds), build
     )
     return cents, assign, fp
 

@@ -23,9 +23,11 @@ def driver_memory_for(master: str | None) -> str | None:
     512 MB per slot, floor 2 GiB (``SPARK_GRAFT_DRIVER_MEM`` overrides).
     None for non-local / externally-supplied masters — a real cluster
     sizes its own executors and the harness supplies its own session."""
-    if master is None or not master.startswith("local"):
+    # local, local[N], local[*] or local[N,maxFailures] — never
+    # local-cluster[...], whose executors are separate JVMs.
+    if master is None or not (master == "local" or master.startswith("local[")):
         return None
-    n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "1"
+    n = master[6 : master.find("]")].split(",")[0] if "[" in master else "1"
     if n == "*":
         slots = os.cpu_count() or 1
     else:

@@ -274,16 +274,14 @@ def test_scan_split_estimate_unparseable_conf_falls_back(spark, monkeypatch):
     'fall back to .rdd', never an uncaught ValueError out of fan_out."""
     from mapreducer_spark.sources import tables
 
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "128m")
-    try:
-        monkeypatch.setattr(
-            tables, "_size_to_bytes",
-            lambda s: (_ for _ in ()).throw(ValueError(s)),
-        )
-        df = _StubScanFrame(spark, ["file:/tmp/x.parquet"])
-        assert tables._estimated_scan_splits(df) is None
-    finally:
-        pass
+    # No conf.set: the patched parser rejects whatever value is set,
+    # and a set conf would leak into every later test in the session.
+    monkeypatch.setattr(
+        tables, "_size_to_bytes",
+        lambda s: (_ for _ in ()).throw(ValueError(s)),
+    )
+    df = _StubScanFrame(spark, ["file:/tmp/x.parquet"])
+    assert tables._estimated_scan_splits(df) is None
 
 
 def test_local_fan_out_behavior_unchanged(spark, sf_dir):

@@ -448,10 +448,15 @@ def test_cli_snapshot_commands(spark, tmp_path, capsys):
     assert [m["version"] for m in lines] == [1]
 
 
-def test_session_memo_hits_and_evicts_stale_apps(spark):
+def test_session_memo_hits_and_evicts_stale_apps(spark, tmp_path, monkeypatch):
     """functions.memo contract: same key -> same materialized frame
     (one build), and entries from dead applications are evicted on
-    insert so long-lived processes don't pin stale checkpoints."""
+    insert so long-lived processes don't pin stale checkpoints.  With
+    tokens: same token hits, a new token rebuilds in place of the old
+    entry; a live (None-token) entry is a checkpoint, a frozen-token
+    entry is the parquet scan as read."""
+    from pyspark.sql.readwriter import DataFrameReader
+
     from mapreducer_spark.functions import memo
 
     calls = []
@@ -465,6 +470,40 @@ def test_session_memo_hits_and_evicts_stale_apps(spark):
     assert a is b
     assert len(calls) == 1
     assert a.count() == 3
+
+    def logical(df):
+        return df._jdf.queryExecution().logical().toString()
+
+    assert logical(a).startswith("LogicalRDD")
+
+    path = str(tmp_path / "artifact")
+    spark.range(4).write.parquet(path)
+    reads = []
+    real_parquet = DataFrameReader.parquet
+
+    def counting_parquet(self, *paths, **kw):
+        reads.append(paths)
+        return real_parquet(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counting_parquet)
+
+    def frozen_build():
+        calls.append(1)
+        return spark.read.parquet(path)
+
+    key = ("memo_test_art",)
+    f1 = memo.session_memo(spark, key, frozen_build, token={"n_rows": 4})
+    assert "parquet" in logical(f1) and "LogicalRDD" not in logical(f1)
+    assert (len(calls), len(reads)) == (2, 1)
+    hit = memo.session_memo(spark, key, frozen_build, token={"n_rows": 4})
+    assert hit is f1
+    assert (len(calls), len(reads)) == (2, 1)
+    f2 = memo.session_memo(spark, key, frozen_build, token={"n_rows": 5})
+    assert f2 is not f1
+    assert (len(calls), len(reads)) == (3, 2)
+    entry = memo._CACHE[(spark.sparkContext.applicationId, *key)]
+    assert entry[0] == {"n_rows": 5} and entry[1] is f2
+    assert all(v[1] is not f1 for v in memo._CACHE.values())
 
     memo._CACHE[("dead-app-id", "x")] = a
     memo.session_memo(spark, ("memo_test_k2",), lambda: spark.range(1))
@@ -731,5 +770,8 @@ def test_driver_memory_sized_to_local_slots(monkeypatch):
     assert driver_memory_for(None) is None
     assert driver_memory_for("yarn") is None
     assert driver_memory_for("spark://host:7077") is None
+    assert driver_memory_for("local[32,2]") == "16g"
+    assert driver_memory_for("local[*,3]") == driver_memory_for("local[*]")
+    assert driver_memory_for("local-cluster[2,1,1024]") is None
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
     assert driver_memory_for("local[32]") == "3g"

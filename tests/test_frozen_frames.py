@@ -168,6 +168,41 @@ def test_freeze_roundtrip_in_tmpdir(spark, tmp_path, monkeypatch, _clear_fp_cach
     ]
 
 
+def test_refreeze_replaces_session_artifact(
+    spark, tmp_path, monkeypatch, _clear_fp_cache
+):
+    """A mid-session refreeze must never leave a consumer on the old
+    rows: the near-dup pair memo is keyed on the fingerprint record that
+    served it, so the next serve after a refreeze reads the NEW artifact
+    and the old cache entry is gone."""
+    import dataclasses
+
+    from mapreducer_spark.functions import memo
+    from mapreducer_spark.operators.dedup import neardup_pairs_shared
+
+    monkeypatch.setattr(fz, "_FROZEN_DIR", str(tmp_path))
+    monkeypatch.setattr(fz, "_FP_PATH", str(tmp_path / "fp.json"))
+    fz._fingerprints_at.cache_clear()
+    sf_dir = FIXTURES[0]
+    real = _specs()["neardup_pairs"]
+    fz.freeze(spark, sf_dir, names=["neardup_pairs"])
+    first = neardup_pairs_shared(spark, sf_dir)
+    all_rows = sorted(map(tuple, first.collect()))
+    assert len(all_rows) >= 2
+
+    # Refreeze with different rows (same sources, same version).
+    def first_pair(s, d):
+        return real.build(s, d).orderBy("id_a", "id_b").limit(1)
+
+    monkeypatch.setitem(
+        fz._SPECS, "neardup_pairs", dataclasses.replace(real, build=first_pair)
+    )
+    fz.freeze(spark, sf_dir, names=["neardup_pairs"])
+    second = neardup_pairs_shared(spark, sf_dir)
+    assert sorted(map(tuple, second.collect())) == all_rows[:1]
+    assert all(v[1] is not first for v in memo._CACHE.values())
+
+
 def test_extra_file_drift_refuses_assign_artifact(monkeypatch, _clear_fp_cache):
     """The inverted-list artifact (ann_ivf_assign) is pinned to the
     CENTROID file via extra_files: an IVF retrain that rewrites

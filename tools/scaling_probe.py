@@ -24,6 +24,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from mapreducer_spark.functions.memo import clear_session_caches  # noqa: E402
 from mapreducer_spark.registry import all_queries  # noqa: E402
 from mapreducer_spark.session import get_spark  # noqa: E402
 from mapreducer_spark.sources import TABLES, load_table  # noqa: E402
@@ -99,9 +100,7 @@ def main() -> None:
             best = None
             for _ in range(2):
                 if cold:
-                    from mapreducer_spark.functions import memo as _memo
-
-                    _memo._CACHE.clear()
+                    clear_session_caches()
                 t0 = time.perf_counter()
                 q.fn(spark, d).write.format("noop").mode("overwrite").save()
                 dt = time.perf_counter() - t0
